@@ -11,7 +11,6 @@ decontamination), udfs (the pandas-UDF/UDTF surface).
 from hw_kafka_streams_spark.operators.censor import (
     block_messages,
     censor_column,
-    censor_column_many_words,
     filter_pipeline,
 )
 from hw_kafka_streams_spark.operators.chunking import sequence_pack_stats
@@ -49,7 +48,6 @@ __all__ = [
     "boilerplate_prune",
     "brute_force_topk",
     "censor_column",
-    "censor_column_many_words",
     "connected_components",
     "embedding_near_dup_pairs",
     "exact_dedup",

@@ -11,6 +11,16 @@ Reference behavior (svolga/hw-kafka-streams):
   the word's length (MessageFilterProcessor.java:31-44). The reference
   iterates the whole word store per record — O(records × words).
 
+Pinned censor semantics (the one rule list, :func:`_censor_rules`):
+drop empty words, dedupe, then apply one ``replaceAll`` per word in
+UTF-8 byte order of the word — the reference's RocksDB key order — so
+the result never depends on the order the dictionary arrives in
+(``['bc','ab']`` on ``abc`` gives ``**c``; ``['abc','ab']`` on
+``abcd`` gives ``**cd``). Each pass is leftmost, non-overlapping and
+Unicode-case-insensitive (see :func:`_java_ci_literal`). Both engines
+apply that list: :func:`censor_column` (JVM ``regexp_replace``) and
+``udfs.make_censor_udf`` (pandas).
+
 Spark-first re-expression:
 - Blocking → a single ``left_anti`` broadcast join. Catalyst can't see
   through an opaque joiner lambda, but since we author the plan we
@@ -22,8 +32,6 @@ Spark-first re-expression:
   to the driver at plan-build time is the same replication decision —
   but the resulting plan is pure JVM column expressions inside
   whole-stage codegen: O(records) vectorized passes, not a Python UDF.
-  For unbounded dictionaries see ``censor_column_many_words`` (combined
-  regex in one pass).
 """
 
 from __future__ import annotations
@@ -36,16 +44,25 @@ from pyspark.sql import functions as F
 
 
 def _java_ci_literal(word: str) -> str:
-    """Case-insensitive (incl. Unicode), literal-quoted regex for a word.
+    """Case-insensitive, literal-quoted regex for a word.
 
-    Matches the reference's ``"(?i)" + Pattern.quote(word)``
-    (MessageFilterProcessor.java:39). Java's (?i) alone is
-    ASCII-case-insensitive; (?iu) adds Unicode case folding so Cyrillic
-    ``Политика``/``политика`` both match — the golden data relies on
-    Unicode-correct folding. ``re.escape`` is a safe literal quoting
-    for Java regex too (escapes every non-alphanumeric).
+    Mirrors the reference's ``"(?i)" + Pattern.quote(word)``
+    (MessageFilterProcessor.java:39), with one deliberate departure:
+    Java's ``(?i)`` alone folds ASCII only, while ``(?iu)`` also folds
+    Unicode, so ``Политика`` masks ``ПОЛИТИКА`` too. The golden data
+    does not decide this (its Cyrillic word appears with the same
+    case); ``test_censor_case_insensitive_unicode`` pins it.
+    ``re.escape`` is a safe literal quoting for Java regex too (it
+    escapes only non-alphanumerics).
     """
     return "(?iu)" + re.escape(word)
+
+
+def _censor_rules(words: Iterable[str]) -> list[tuple[str, str]]:
+    """The censor as ``(pattern, mask)`` pairs, in the order applied:
+    non-empty, deduped words in UTF-8 byte order."""
+    ordered = sorted({w for w in words if w}, key=lambda w: w.encode("utf-8"))
+    return [(_java_ci_literal(w), "*" * len(w)) for w in ordered]
 
 
 def censor_column(text: Column | str, words: Iterable[str]) -> Column:
@@ -57,41 +74,18 @@ def censor_column(text: Column | str, words: Iterable[str]) -> Column:
     matching MessageFilterProcessor.java:33-35.
     """
     col = F.col(text) if isinstance(text, str) else text
-    for w in words:
-        if not w:
-            continue
-        col = F.regexp_replace(col, _java_ci_literal(w), "*" * len(w))
+    for pattern, mask in _censor_rules(words):
+        col = F.regexp_replace(col, pattern, mask)
     return col
 
 
-def censor_column_many_words(text: Column | str, words: list[str]) -> Column:
-    """Censor with ONE combined alternation regex — for large dictionaries.
-
-    ``(?iu)(w1|w2|...)`` with longest-first ordering, replacement via a
-    single pass + a length-preserving mask can't be expressed with a
-    constant replacement string (lengths differ), so we mask per-length
-    group: one regexp_replace per distinct word length, each with an
-    alternation of that length's words. #passes = #distinct lengths,
-    typically ≪ #words.
-    """
-    col = F.col(text) if isinstance(text, str) else text
-    by_len: dict[int, list[str]] = {}
-    for w in words:
-        if w:
-            by_len.setdefault(len(w), []).append(w)
-    for length, group in sorted(by_len.items(), reverse=True):
-        pattern = "(?iu)(?:" + "|".join(re.escape(w) for w in group) + ")"
-        col = F.regexp_replace(col, pattern, "*" * length)
-    return col
+def banned_words(control_df: DataFrame) -> list[str]:
+    """Collect the keys of a ``(key, value)`` control table whose value
+    is ``"ban"`` (MessageFilterProcessor.java:37)."""
+    return [r[0] for r in control_df.filter(F.col("value") == "ban").select("key").collect()]
 
 
-def block_messages(
-    messages: DataFrame,
-    blocked: DataFrame,
-    sender_col: str = "sender",
-    receiver_col: str = "receiver",
-    blocked_key_col: str = "key",
-) -> DataFrame:
+def block_messages(messages: DataFrame, blocked: DataFrame) -> DataFrame:
     """Drop messages whose ``receiver:sender`` pair is blocked.
 
     The reference's O4+O5 (leftJoin-null + filter, KafkaStreamApp.java:
@@ -99,32 +93,29 @@ def block_messages(
     order: *receiver first* (KafkaStreamApp.java:158) — ``login2:login4``
     blocks login4→login2, not login4→login1.
     """
-    join_key = F.concat(F.col(receiver_col), F.lit(":"), F.col(sender_col))
-    return messages.join(
-        F.broadcast(blocked), join_key == blocked[blocked_key_col], "left_anti"
-    )
+    join_key = F.concat(F.col("receiver"), F.lit(":"), F.col("sender"))
+    return messages.join(F.broadcast(blocked), join_key == blocked["key"], "left_anti")
+
+
+def filtered_messages(messages: DataFrame, blocked: DataFrame, words: list[str]) -> DataFrame:
+    """The core transformation, source-agnostic (works on batch AND
+    streaming DataFrames — the plan is identical): block, then censor.
+
+    ``messages``: (sender, text, receiver); ``blocked``: (key, value)
+    with key = "receiver:sender"; ``words``: banned word list.
+    """
+    return block_messages(messages, blocked).withColumn("text", censor_column("text", words))
 
 
 def filter_pipeline(
-    messages: DataFrame,
-    blocked: DataFrame,
-    forbidden_words: DataFrame,
-    text_col: str = "text",
-    word_col: str = "word",
-    word_value_col: str = "value",
+    messages: DataFrame, blocked: DataFrame, forbidden_words: DataFrame
 ) -> DataFrame:
-    """The full reference topology, batch form: block then censor.
+    """The full reference topology, batch form, with the word dim as a
+    ``(word, value)`` table.
 
-    Only words whose control value equals ``"ban"`` take effect
-    (MessageFilterProcessor.java:37). The word dim is collected at
-    plan-build time (GlobalKTable-style full replication — it is tiny
-    by construction); everything per-record stays JVM-side.
+    The word dim is collected at plan-build time (GlobalKTable-style
+    full replication — it is tiny by construction); everything
+    per-record stays JVM-side.
     """
-    words = [
-        r[0]
-        for r in forbidden_words.filter(F.col(word_value_col) == "ban")
-        .select(word_col)
-        .collect()
-    ]
-    survived = block_messages(messages, blocked)
-    return survived.withColumn(text_col, censor_column(text_col, words))
+    words = banned_words(forbidden_words.withColumnRenamed("word", "key"))
+    return filtered_messages(messages, blocked, words)

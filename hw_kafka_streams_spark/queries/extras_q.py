@@ -146,10 +146,11 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                    'data', '****', 'gi') AS text_censored
         FROM documents WHERE doc_id < 500 ORDER BY doc_id
     """,
-    doc="Pandas-UDF censor path (unbounded-dictionary variant): Arrow-"
-    "batched scalar UDF, regex precompiled per executor, length-"
-    "preserving masks applied longest-word-first (same order as the "
-    "oracle's nested replaces).",
+    doc="Pandas-UDF censor path: Arrow-batched scalar UDF applying "
+    "censor_column's rule list (one precompiled regex per word, "
+    "length-preserving masks, UTF-8 byte order of the words). The three "
+    "words never overlap, so the oracle's nesting order gives the same "
+    "result.",
 )
 def q_censor_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hw_kafka_streams_spark.operators.udfs import make_censor_udf

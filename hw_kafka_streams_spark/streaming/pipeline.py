@@ -12,14 +12,15 @@ Spark-first mapping:
   sinks).
 - GlobalKTable → a small static DataFrame broadcast to every task —
   the same full-replication decision the reference makes per instance.
-  Live dictionary updates → ``foreachBatch`` re-reading the dims each
-  microbatch (still broadcast-joined; see
-  :func:`run_reference_topology`).
-- leftJoin+null+filter → one stream-static LEFT ANTI broadcast join.
-- transformValues → fold of regexp_replace (operators/censor.py).
+  Live dictionary updates → every microbatch re-reads the dims inside
+  ``foreachBatch``; the Kafka job and its file twin share that one
+  wiring and differ only in how a control table is read.
+- leftJoin+null+filter → one LEFT ANTI broadcast join, and
+  transformValues → fold of regexp_replace: both in
+  ``operators.censor.filtered_messages``, re-exported here.
 
 No shuffle anywhere in the streaming plan: source partitions map 1:1
-to tasks, both joins are broadcast — the plan scales with input
+to tasks, the one join is broadcast — the plan scales with input
 partitions alone, which is exactly how you want a 100-TB/day topic
 consumed.
 """
@@ -31,7 +32,11 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hw_kafka_streams_spark.operators.censor import censor_column, filter_pipeline
+from hw_kafka_streams_spark.operators.censor import (
+    banned_words,
+    filter_pipeline,
+    filtered_messages,
+)
 from hw_kafka_streams_spark.streaming import serde
 
 TOPIC_MESSAGES = "messages"
@@ -83,81 +88,61 @@ def read_control_table(spark: SparkSession, bootstrap: str, topic: str) -> DataF
     return serde.compact_changelog(kv).select("key", "value")
 
 
-def filtered_messages(
-    messages: DataFrame,
-    blocked: DataFrame,
-    words: list[str],
-) -> DataFrame:
-    """The core transformation, source-agnostic (works on batch AND
-    streaming DataFrames — the plan is identical).
-
-    ``messages``: (sender, text, receiver); ``blocked``: (key, value)
-    with key = "receiver:sender"; ``words``: banned word list.
-    """
-    join_key = F.concat(F.col("receiver"), F.lit(":"), F.col("sender"))
-    survived = messages.join(
-        F.broadcast(blocked.select("key")), join_key == F.col("key"), "left_anti"
-    )
-    return survived.withColumn("text", censor_column("text", words))
-
-
-def run_reference_topology(
-    spark: SparkSession,
-    bootstrap: str,
+def _start_per_batch(
+    stream: DataFrame,
+    read_dim: Callable[[str], DataFrame],
+    sink: Callable[[DataFrame], None],
     checkpoint_dir: str,
-    refresh_dims_each_batch: bool = True,
-    sink_topic: str = TOPIC_OUT,
 ):
-    """Wire the full streaming job: Kafka → filter/censor → Kafka.
-
-    With ``refresh_dims_each_batch`` the control tables are re-read
-    inside ``foreachBatch`` every microbatch — the closest Spark
-    equivalent of GlobalKTable live updates (new blocks/words take
-    effect on the next batch). Otherwise they are snapshotted once at
-    start (cheaper; dictionary frozen for the query lifetime).
-
-    Returns the started StreamingQuery.
-    """
-    stream = serde.decode_messages(read_kafka_stream(spark, bootstrap, TOPIC_MESSAGES))
-
-    if not refresh_dims_each_batch:
-        blocked = read_control_table(spark, bootstrap, TOPIC_BLOCKED)
-        words_df = read_control_table(spark, bootstrap, TOPIC_WORDS)
-        words = [r.key for r in words_df.filter(F.col("value") == "ban").collect()]
-        out = serde.encode_messages(filtered_messages(stream, blocked, words))
-        return (
-            out.writeStream.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", sink_topic)
-            .option("checkpointLocation", checkpoint_dir)
-            .start()
-        )
-
-    def _kafka_sink(result: DataFrame) -> None:
-        (
-            result.write.format("kafka")
-            .option("kafka.bootstrap.servers", bootstrap)
-            .option("topic", sink_topic)
-            .save()
-        )
+    """Start ``stream`` through the topology one ``foreachBatch`` at a
+    time, re-reading the control tables with ``read_dim(topic)`` every
+    micro-batch (see :func:`process_batch_with_refresh`)."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         process_batch_with_refresh(
             batch_df,
-            blocked_provider=lambda: read_control_table(spark, bootstrap, TOPIC_BLOCKED),
-            words_provider=lambda: [
-                r.key
-                for r in read_control_table(spark, bootstrap, TOPIC_WORDS)
-                .filter(F.col("value") == "ban")
-                .collect()
-            ],
-            sink=lambda df: _kafka_sink(serde.encode_messages(df)),
+            blocked_provider=lambda: read_dim(TOPIC_BLOCKED),
+            words_provider=lambda: banned_words(read_dim(TOPIC_WORDS)),
+            sink=sink,
         )
 
     return (
         stream.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
         .start()
+    )
+
+
+def run_reference_topology(
+    spark: SparkSession,
+    bootstrap: str,
+    checkpoint_dir: str,
+    sink_topic: str = TOPIC_OUT,
+):
+    """Wire the full streaming job: Kafka → filter/censor → Kafka.
+
+    The control tables are re-read inside ``foreachBatch`` every
+    microbatch — the closest Spark equivalent of GlobalKTable live
+    updates (new blocks/words take effect on the next batch).
+
+    Returns the started StreamingQuery.
+    """
+    stream = serde.decode_messages(read_kafka_stream(spark, bootstrap, TOPIC_MESSAGES))
+
+    def _kafka_sink(result: DataFrame) -> None:
+        (
+            serde.encode_messages(result)
+            .write.format("kafka")
+            .option("kafka.bootstrap.servers", bootstrap)
+            .option("topic", sink_topic)
+            .save()
+        )
+
+    return _start_per_batch(
+        stream,
+        read_dim=lambda topic: read_control_table(spark, bootstrap, topic),
+        sink=_kafka_sink,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -198,34 +183,22 @@ def run_file_topology_with_refresh(
     checkpoint_dir: str,
     sink: Callable[[DataFrame], None],
 ):
-    """Broker-free twin of ``run_reference_topology(refresh_dims_each_
-    batch=True)``: the SAME per-batch snapshot machinery (changelog
-    compaction through :func:`process_batch_with_refresh`), with parquet
-    directories standing in for the control topics. A blocked user or
-    banned word appended to the control dir while the query runs takes
-    effect on the next microbatch — the reference's GlobalKTable
-    liveness model (KafkaStreamApp.java:140-152), provable in tests.
+    """Broker-free twin of :func:`run_reference_topology`: the SAME
+    per-batch snapshot machinery (changelog compaction through
+    :func:`process_batch_with_refresh`), with parquet directories
+    standing in for the control topics. A blocked user or banned word
+    appended to the control dir while the query runs takes effect on
+    the next microbatch — the reference's GlobalKTable liveness model
+    (KafkaStreamApp.java:140-152), provable in tests.
     """
     schema = "sender string, text string, receiver string"
     stream = spark.readStream.schema(schema).parquet(messages_dir)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        process_batch_with_refresh(
-            batch_df,
-            blocked_provider=lambda: read_control_dir(spark, blocked_dir),
-            words_provider=lambda: [
-                r.key
-                for r in read_control_dir(spark, words_dir)
-                .filter(F.col("value") == "ban")
-                .collect()
-            ],
-            sink=sink,
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
+    dirs = {TOPIC_BLOCKED: blocked_dir, TOPIC_WORDS: words_dir}
+    return _start_per_batch(
+        stream,
+        read_dim=lambda topic: read_control_dir(spark, dirs[topic]),
+        sink=sink,
+        checkpoint_dir=checkpoint_dir,
     )
 
 
@@ -236,8 +209,6 @@ def peek(df: DataFrame, name: str, *metrics) -> DataFrame:
     second pass, readable from QueryProgress (streaming) or an
     ObservationListener (batch). Defaults to a row count.
     """
-    from pyspark.sql import functions as F
-
     if not metrics:
         metrics = (F.count(F.lit(1)).alias("n_rows"),)
     return df.observe(name, *metrics)
@@ -248,7 +219,6 @@ def run_file_topology(
     messages_dir: str,
     blocked: DataFrame,
     words: list[str],
-    sink: Callable[[DataFrame], None] | None = None,
     queryName: str = "filtered_messages",
 ):
     """Broker-free variant for tests/local runs: file source → memory sink.
@@ -264,18 +234,6 @@ def run_file_topology(
     return writer.start()
 
 
-__all__ = [
-    "filtered_messages",
-    "filter_pipeline",
-    "read_control_dir",
-    "read_control_table",
-    "read_kafka_stream",
-    "run_file_topology",
-    "run_file_topology_with_refresh",
-    "run_reference_topology",
-]
-
-
 def observed_funnel(df: DataFrame, stages: list) -> DataFrame:
     """Streaming twin of :func:`~hw_kafka_streams_spark.operators.
     quality.filter_funnel`: attach the funnel's cumulative-survivor
@@ -289,8 +247,6 @@ def observed_funnel(df: DataFrame, stages: list) -> DataFrame:
     returned DataFrame keeps only rows passing ALL stages, so the
     operator is simultaneously the filter and its own monitoring.
     """
-    from pyspark.sql import functions as F
-
     if not stages:
         raise ValueError("at least one stage")
     cum = None
@@ -300,3 +256,17 @@ def observed_funnel(df: DataFrame, stages: list) -> DataFrame:
         metrics.append(F.sum(cum.cast("long")).alias(f"pass_{name}"))
     observed = df.observe("funnel", *metrics)
     return observed.filter(cum)
+
+
+__all__ = [
+    "filtered_messages",
+    "filter_pipeline",
+    "observed_funnel",
+    "peek",
+    "read_control_dir",
+    "read_control_table",
+    "read_kafka_stream",
+    "run_file_topology",
+    "run_file_topology_with_refresh",
+    "run_reference_topology",
+]

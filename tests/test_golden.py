@@ -12,13 +12,7 @@ Fixtures and expected output are the reference's own self-seeded run
 
 from __future__ import annotations
 
-from hw_kafka_streams_spark.operators.censor import (
-    censor_column,
-    censor_column_many_words,
-    filter_pipeline,
-)
-
-from pyspark.sql import functions as F
+from hw_kafka_streams_spark.operators.censor import censor_column, filter_pipeline
 
 
 def _fixtures(spark):
@@ -53,8 +47,14 @@ def test_golden_pipeline(spark):
 
 
 def test_censor_case_insensitive_unicode(spark):
+    """``(?iu)`` folds Unicode case, a deliberate departure from Java's
+    ASCII-only ``(?i)``: ``Политика`` masks ``ПОЛИТИКА`` too."""
     df = spark.createDataFrame(
-        [("политика и ПОЛИТИКА",), ("Alcohol Алкоголь алкоголь",), (None,)],
+        [
+            ("политика и ПОЛИТИКА",),
+            ("Alcohol Алкоголь алкоголь",),
+            (None,),
+        ],
         "text string",
     )
     out = df.select(censor_column("text", ["Политика", "Алкоголь"]).alias("text"))
@@ -62,6 +62,18 @@ def test_censor_case_insensitive_unicode(spark):
     assert got[0] == "******** и ********"
     assert got[1] == "Alcohol ******** ********"
     assert got[2] is None
+
+
+def test_censor_fold_order_is_pinned(spark):
+    """Words apply in UTF-8 byte order (the reference's RocksDB key
+    order), whatever order the dictionary arrives in."""
+    df = spark.createDataFrame([("abc",), ("abcd",)], "text string")
+
+    def run(words):
+        return [r.t for r in df.select(censor_column("text", words).alias("t")).collect()]
+
+    assert run(["bc", "ab"]) == run(["ab", "bc"]) == ["**c", "**cd"]
+    assert run(["abc", "ab"]) == run(["ab", "abc"]) == ["**c", "**cd"]
 
 
 def test_censor_literal_not_regex(spark):
@@ -75,10 +87,10 @@ def test_censor_literal_not_regex(spark):
 
 
 def test_censor_many_words_variant(spark):
+    """The input the removed many-words variant checked now runs
+    through the single fold, with the same expected output."""
     df = spark.createDataFrame([("Политика spring SPRING ok",)], "text string")
-    out = df.select(
-        censor_column_many_words("text", ["Политика", "spring", "ok"]).alias("text")
-    )
+    out = df.select(censor_column("text", ["Политика", "spring", "ok"]).alias("text"))
     assert out.collect()[0].text == "******** ****** ****** **"
 
 

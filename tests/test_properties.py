@@ -1,15 +1,23 @@
 """Property-based tests (hypothesis) for the pure-Python kernels.
 
-Spark-free (no session): each example is microseconds, so hypothesis
-can explore aggressively.
+Mostly Spark-free (no session): each example is microseconds, so
+hypothesis can explore aggressively. The censor's differential test is
+the exception: it runs both engines on a DataFrame per example, so its
+example count is bounded.
 """
 
 from __future__ import annotations
 
-from hypothesis import given, settings
-from hypothesis import strategies as st
+import re
 
-from hw_kafka_streams_spark.operators.udfs import _AhoCorasick, _length_safe_lower
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+from pyspark.sql import functions as F
+
+from hw_kafka_streams_spark.operators.censor import _censor_rules, censor_column
+from hw_kafka_streams_spark.operators.udfs import make_censor_udf
+
+# --- censor: the one rule list, and both engines that apply it ---------------
 
 # words without '*' (masking introduces stars; a star-free dictionary
 # can't gain new occurrences from masking)
@@ -17,67 +25,82 @@ word = st.text(
     alphabet=st.characters(blacklist_characters="*", blacklist_categories=("Cs",)),
     min_size=1,
     max_size=8,
-).filter(lambda w: w.lower() != w.upper() or not w.isspace())
+)
 text = st.text(
     alphabet=st.characters(blacklist_categories=("Cs",)), max_size=200
 )
 
 
+def _fold(t: str, words) -> str:
+    """Apply the rule list the way the pandas engine does, one pass per rule."""
+    for pattern, mask in _censor_rules(words):
+        t = re.sub(pattern, mask, t)
+    return t
+
+
 @settings(max_examples=300, deadline=None)
 @given(text, st.lists(word, max_size=5))
 def test_mask_preserves_length(t, words):
-    ac = _AhoCorasick(words)
-    assert len(ac.mask(t)) == len(t)
+    assert len(_fold(t, words)) == len(t)
 
 
 @settings(max_examples=300, deadline=None)
 @given(text, st.lists(word, min_size=1, max_size=5))
 def test_no_banned_word_survives(t, words):
-    ac = _AhoCorasick(words)
-    masked = ac.mask(t)
-    low = masked.lower()
+    masked = _fold(t, words)
     for w in words:
-        lw = w.lower()
-        # every original occurrence was masked; '*' can't recreate a
-        # star-free word, so none may remain
-        assert lw not in low or "*" in lw or lw != lw.replace("*", ""), (
-            t,
-            words,
-            masked,
-        )
-        if "*" not in lw:
-            assert lw not in low
+        assert re.search("(?iu)" + re.escape(w), masked) is None, (t, words, masked)
 
 
 @settings(max_examples=300, deadline=None)
 @given(text, st.lists(word, max_size=5))
 def test_mask_is_idempotent(t, words):
-    ac = _AhoCorasick(words)
-    once = ac.mask(t)
-    assert ac.mask(once) == once
+    once = _fold(t, words)
+    assert _fold(once, words) == once
 
 
-@settings(max_examples=200, deadline=None)
-@given(text, st.lists(word, min_size=1, max_size=4))
-def test_mask_agrees_with_regex_reference(t, words):
-    """Cross-check vs an independent regex implementation that marks
-    every (case-insensitive, overlapping) occurrence position."""
-    ac = _AhoCorasick(words)
-    n = len(t)
-    masked_ref = [False] * n
-    low = _length_safe_lower(t)
-    for w in words:
-        lw = w.lower()
-        start = 0
-        while True:
-            i = low.find(lw, start)
-            if i < 0:
-                break
-            for j in range(i, i + len(lw)):
-                masked_ref[j] = True
-            start = i + 1  # overlapping occurrences too
-    expect = "".join("*" if m else c for c, m in zip(t, masked_ref))
-    assert ac.mask(t) == expect, (t, words)
+def _java_loop(t: str | None, dictionary) -> str | None:
+    """Model of MessageFilterProcessor.transform (java:31-44): walk the
+    word store in key order (RocksDB: UTF-8 bytes of the key) and
+    ``replaceAll("(?i)" + Pattern.quote(word), "*".repeat(len))`` for
+    each word. Case folding is Unicode, the documented ``(?iu)``
+    departure from Java's ASCII-only ``(?i)``."""
+    if t is None:
+        return None
+    for w in sorted(set(dictionary), key=lambda w: w.encode("utf-8")):
+        t = re.sub(re.escape(w), "*" * len(w), t, flags=re.IGNORECASE)
+    return t
+
+
+SMALL = "abAB" + "пП" + "$."
+# overlapping and self-overlapping words are drawn often on purpose
+dictionary = st.lists(
+    st.one_of(
+        st.sampled_from(["aa", "aA", "aba", "ab", "ba", "пп", "П$", "$."]),
+        st.text(SMALL, max_size=4),
+    ),
+    max_size=5,
+)
+texts = st.lists(st.one_of(st.none(), st.text(SMALL, max_size=12)), min_size=1, max_size=8)
+
+
+@settings(max_examples=20, deadline=None)
+@example(words=["aa"], texts=["aaaa", "aaa"])
+@example(words=["bc", "ab"], texts=["abc", "abcd"])
+@example(words=["abc", "ab"], texts=["abcd"])
+@example(words=["aba", "ab", ""], texts=["ababa", None])
+@given(words=dictionary, texts=texts)
+def test_censor_engines_match_java_loop(spark, words, texts):
+    """``censor_column`` (JVM) and ``make_censor_udf`` (pandas) both
+    equal the model of the reference's loop, overlaps included."""
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    rows = df.select(
+        censor_column("text", words).alias("jvm"),
+        make_censor_udf(words)(F.col("text")).alias("py"),
+    ).collect()
+    expect = [_java_loop(t, words) for t in texts]
+    assert [r.jvm for r in rows] == expect, (words, texts)
+    assert [r.py for r in rows] == expect, (words, texts)
 
 
 # --- embedding quantization kernel (pure numpy, Spark-free) -----------------
