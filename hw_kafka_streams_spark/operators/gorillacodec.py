@@ -332,56 +332,65 @@ def decode_gorilla(data: bytes) -> tuple[np.ndarray, np.ndarray]:
     prev_delta = 0
     prev_lz = -1
     prev_mlen = -1
-    for i in range(1, n):
-        if nb < 145:  # worst case: 68-bit ts field + 77-bit value field
-            chunk = data[pos:pos + 24]
-            acc = (acc << (8 * len(chunk))) | int.from_bytes(chunk, "big")
-            nb += 8 * len(chunk)
-            pos += 24
-        if i == 1:
-            nb -= 64
-            u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
-            delta = -(u + 1 >> 1) if u & 1 else u >> 1
-        elif not (acc >> (nb := nb - 1)) & 1:
-            delta = prev_delta
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 7
-            delta = prev_delta + ((acc >> nb) & 0x7F) - 63
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 9
-            delta = prev_delta + ((acc >> nb) & 0x1FF) - 255
-        elif not (acc >> (nb := nb - 1)) & 1:
-            nb -= 12
-            delta = prev_delta + ((acc >> nb) & 0xFFF) - 2047
-        else:
-            nb -= 64
-            u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
-            delta = prev_delta + (-(u + 1 >> 1) if u & 1 else u >> 1)
-        t += delta
-        ts_out[i] = t
-        prev_delta = delta
-        if not (acc >> (nb := nb - 1)) & 1:
+    # A refill at the end of the data is short, and a field read past
+    # the last byte drives the bit count ``nb`` negative; the shift that
+    # follows every read then raises. Name that error; any other is a
+    # corrupt block.
+    try:
+        for i in range(1, n):
+            if nb < 145:  # worst case: 68-bit ts field + 77-bit value field
+                chunk = data[pos:pos + 24]
+                acc = (acc << (8 * len(chunk))) | int.from_bytes(chunk, "big")
+                nb += 8 * len(chunk)
+                pos += 24
+            if i == 1:
+                nb -= 64
+                u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
+                delta = -(u + 1 >> 1) if u & 1 else u >> 1
+            elif not (acc >> (nb := nb - 1)) & 1:
+                delta = prev_delta
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 7
+                delta = prev_delta + ((acc >> nb) & 0x7F) - 63
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 9
+                delta = prev_delta + ((acc >> nb) & 0x1FF) - 255
+            elif not (acc >> (nb := nb - 1)) & 1:
+                nb -= 12
+                delta = prev_delta + ((acc >> nb) & 0xFFF) - 2047
+            else:
+                nb -= 64
+                u = (acc >> nb) & 0xFFFFFFFFFFFFFFFF
+                delta = prev_delta + (-(u + 1 >> 1) if u & 1 else u >> 1)
+            t += delta
+            ts_out[i] = t
+            prev_delta = delta
+            if not (acc >> (nb := nb - 1)) & 1:
+                v_out[i] = v
+                acc &= (1 << nb) - 1
+                continue
+            if not (acc >> (nb := nb - 1)) & 1:  # '10': reuse open window
+                if prev_mlen <= 0:
+                    raise ValueError("corrupt block: window reuse before open")
+                nb -= prev_mlen
+                v ^= ((acc >> nb) & ((1 << prev_mlen) - 1)) << (
+                    64 - prev_lz - prev_mlen)
+            else:  # '11': new window
+                nb -= 5
+                lz = (acc >> nb) & 0x1F
+                nb -= 6
+                mlen = ((acc >> nb) & 0x3F) or 64  # 0 means 64 (paper)
+                nb -= mlen
+                v ^= ((acc >> nb) & ((1 << mlen) - 1)) << (64 - lz - mlen)
+                prev_lz = lz
+                prev_mlen = mlen
+            v &= 0xFFFFFFFFFFFFFFFF
             v_out[i] = v
             acc &= (1 << nb) - 1
-            continue
-        if not (acc >> (nb := nb - 1)) & 1:  # '10': reuse open window
-            if prev_mlen <= 0:
-                raise ValueError("corrupt block: window reuse before open")
-            nb -= prev_mlen
-            v ^= ((acc >> nb) & ((1 << prev_mlen) - 1)) << (
-                64 - prev_lz - prev_mlen)
-        else:  # '11': new window
-            nb -= 5
-            lz = (acc >> nb) & 0x1F
-            nb -= 6
-            mlen = ((acc >> nb) & 0x3F) or 64  # 0 means 64 (paper)
-            nb -= mlen
-            v ^= ((acc >> nb) & ((1 << mlen) - 1)) << (64 - lz - mlen)
-            prev_lz = lz
-            prev_mlen = mlen
-        v &= 0xFFFFFFFFFFFFFFFF
-        v_out[i] = v
-        acc &= (1 << nb) - 1
+    except ValueError:
+        if nb < 0:
+            raise ValueError("truncated Gorilla block") from None
+        raise
     ts = np.array(ts_out, np.int64)
     vals = np.array(v_out, dtype=np.uint64)
     return ts, vals.view(np.float64)

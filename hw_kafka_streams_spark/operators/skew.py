@@ -16,11 +16,12 @@ salting entirely).
 
 from __future__ import annotations
 
-import os
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from hw_kafka_streams_spark.sources.files import FileVersions, file_versions
 
 
 def salted_join(
@@ -86,7 +87,7 @@ def spread_small(
     (``df.inputFiles()`` walks the cached file index; no planning):
     parquet byte-splits cannot subdivide a row group, so effective scan
     parallelism is the source row-group count, read from local footers
-    via pyarrow and memoized per file list (the bench re-constructs
+    via pyarrow and memoized per file version (the bench re-constructs
     each query several times per timed loop). Anything un-probe-able —
     non-local URIs, many files, Spark Connect, missing footers —
     resolves to "already wide", i.e. the no-op: at 100 TB scale the
@@ -104,9 +105,11 @@ def spread_small(
     return df.repartition(n, *[F.col(c) for c in cols])
 
 
-#: file-list → row-group-count memo; keyed on the exact file set so a
-#: different sf_dir (or a rewritten table) re-probes.
-_WIDTH_MEMO: dict[tuple[str, ...], int] = {}
+#: file-version token → row-group-count memo. Keyed on each file's
+#: (path, size, mtime_ns), so a different sf_dir or a table rewritten in
+#: place under the same file names re-probes; oldest entry evicted first.
+_WIDTH_MEMO: dict[FileVersions, int] = {}
+_WIDTH_MEMO_CAP = 256
 
 #: At or above this many source files the scan is wide by construction
 #: (each file is >= 1 split) and footers are not worth reading.
@@ -120,27 +123,18 @@ def _probed_scan_width(df: DataFrame) -> int:
     files = df.inputFiles()
     if len(files) >= _MANY_FILES:
         return 1 << 30
-    if not files:
-        # empty relation or a non-file source (rate, memory, ...):
-        # nothing to spread
+    # no files: empty relation or a non-file source (rate, memory, ...),
+    # nothing to spread; no token: a remote store or a vanished file
+    token = file_versions(files) if files else None
+    if not token:
         return 1 << 30
-    memo_key = tuple(sorted(files))
-    hit = _WIDTH_MEMO.get(memo_key)
+    hit = _WIDTH_MEMO.get(token)
     if hit is not None:
         return hit
-    total = 0
-    for uri in memo_key:
-        if uri.startswith("file:"):
-            path = uri[len("file://"):] if uri.startswith("file://") \
-                else uri[len("file:"):]
-        elif uri.startswith("/"):
-            path = uri
-        else:
-            return 1 << 30  # remote store: treat as wide, add nothing
-        if not os.path.exists(path):
-            return 1 << 30
-        import pyarrow.parquet as pq
+    import pyarrow.parquet as pq
 
-        total += pq.ParquetFile(path).metadata.num_row_groups
-    _WIDTH_MEMO[memo_key] = total
+    total = sum(pq.ParquetFile(path).metadata.num_row_groups for path, _, _ in token)
+    if len(_WIDTH_MEMO) >= _WIDTH_MEMO_CAP:
+        del _WIDTH_MEMO[next(iter(_WIDTH_MEMO))]
+    _WIDTH_MEMO[token] = total
     return total

@@ -49,6 +49,8 @@ def get_spark(
         # the engine ships pushdown-capable Python data sources
         # (sources/message_source.py); off by default in Spark 4.1
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        # list input paths on the driver: the default (32) starts a listing job per micro-batch
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))
         .config("spark.ui.enabled", "false")
     )

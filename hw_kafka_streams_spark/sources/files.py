@@ -10,9 +10,55 @@ to compact into parquet early in any 100 TB pipeline).
 
 from __future__ import annotations
 
+import os
+from collections.abc import Iterable
+
 from pyspark.sql import DataFrame, SparkSession
 
 _FORMATS = {"parquet", "csv", "json", "orc"}
+
+#: ``(path, size, mtime_ns)`` per file, sorted by path.
+FileVersions = tuple[tuple[str, int, int], ...]
+
+
+def file_versions(paths: Iterable[str]) -> FileVersions | None:
+    """Version token of a set of local files: ``(path, size, mtime_ns)``
+    per file, sorted. A file rewritten in place under the same name
+    gets a new token. ``paths`` may be plain paths or ``file:`` URIs
+    (what ``DataFrame.inputFiles()`` returns). None when a path names a
+    remote store or a file that is gone: the caller cannot tell whether
+    its data changed."""
+    out = []
+    for p in paths:
+        if p.startswith("file:"):
+            p = p[len("file://"):] if p.startswith("file://") else p[len("file:"):]
+        elif not p.startswith("/"):
+            return None
+        try:
+            st = os.stat(p)
+        except OSError:
+            return None
+        out.append((p, st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def dir_version(path: str) -> FileVersions | None:
+    """Version token of the data files under a local directory: the
+    :func:`file_versions` of every file Spark's reader would list.
+    Names starting with ``.`` or ``_`` are skipped as Spark skips them
+    (``_k=v`` partition directories excepted). None when ``path`` is not
+    a local directory."""
+    if not os.path.isdir(path):
+        return None
+
+    def hidden(name: str) -> bool:
+        return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+    files = []
+    for base, dirs, names in os.walk(os.path.abspath(path)):
+        dirs[:] = [d for d in dirs if not hidden(d)]
+        files += [os.path.join(base, n) for n in names if not hidden(n)]
+    return file_versions(files)
 
 
 def read_files(

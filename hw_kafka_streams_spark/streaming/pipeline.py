@@ -12,9 +12,12 @@ Spark-first mapping:
   sinks).
 - GlobalKTable → a small static DataFrame broadcast to every task —
   the same full-replication decision the reference makes per instance.
-  Live dictionary updates → every microbatch re-reads the dims inside
+  Live dictionary updates → each microbatch asks for the dims inside
   ``foreachBatch``; the Kafka job and its file twin share that one
-  wiring and differ only in how a control table is read.
+  wiring and differ only in how a control table is read. The file twin
+  re-reads when the control dir's version changes and otherwise serves
+  a memoized driver-local snapshot, as a GlobalKTable serves its store
+  instead of rescanning the topic per record.
 - leftJoin+null+filter → one LEFT ANTI broadcast join, and
   transformValues → fold of regexp_replace: both in
   ``operators.censor.filtered_messages``, re-exported here.
@@ -27,6 +30,8 @@ consumed.
 
 from __future__ import annotations
 
+import os
+import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -37,6 +42,7 @@ from hw_kafka_streams_spark.operators.censor import (
     filter_pipeline,
     filtered_messages,
 )
+from hw_kafka_streams_spark.sources.files import FileVersions, dir_version
 from hw_kafka_streams_spark.streaming import serde
 
 TOPIC_MESSAGES = "messages"
@@ -95,8 +101,10 @@ def _start_per_batch(
     checkpoint_dir: str,
 ):
     """Start ``stream`` through the topology one ``foreachBatch`` at a
-    time, re-reading the control tables with ``read_dim(topic)`` every
-    micro-batch (see :func:`process_batch_with_refresh`)."""
+    time, asking ``read_dim(topic)`` for the control tables every
+    micro-batch (see :func:`process_batch_with_refresh`). The file
+    twin's ``read_dim`` re-reads when the control dir's version changes
+    (:func:`read_control_dir`); the Kafka one rescans the topic."""
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         process_batch_with_refresh(
@@ -121,9 +129,11 @@ def run_reference_topology(
 ):
     """Wire the full streaming job: Kafka → filter/censor → Kafka.
 
-    The control tables are re-read inside ``foreachBatch`` every
+    The control topics are rescanned inside ``foreachBatch`` every
     microbatch — the closest Spark equivalent of GlobalKTable live
-    updates (new blocks/words take effect on the next batch).
+    updates (new blocks/words take effect on the next batch). Unlike the
+    file twin's :func:`read_control_dir`, this scan is not yet gated on
+    the topics' end offsets.
 
     Returns the started StreamingQuery.
     """
@@ -154,14 +164,24 @@ def process_batch_with_refresh(
 ) -> None:
     """One microbatch with GlobalKTable-style live dims.
 
-    The providers are called per batch — new blocks/words take effect on
-    the NEXT batch, which is exactly the reference's GlobalKTable
-    freshness model (the global store is updated asynchronously by its
-    own thread; the processor sees whatever is materialized when the
-    record arrives). Factored out of the Kafka job so the refresh
+    The providers are called per batch and re-read when the control
+    source's version changes (:func:`read_control_dir`) — new
+    blocks/words take effect on the NEXT batch, which is exactly the
+    reference's GlobalKTable freshness model (the global store is
+    updated asynchronously by its own thread; the processor sees
+    whatever is materialized when the record arrives). Factored out of the Kafka job so the refresh
     semantics are testable against file sources (tests/test_streaming).
     """
     sink(filtered_messages(batch_df, blocked_provider(), words_provider()))
+
+
+#: (session, dir) → (dir version token, snapshot); oldest entry evicted
+#: first. The session is part of the key, so a stopped session's
+#: snapshot is never served to the session that replaces it.
+_CONTROL_SNAPSHOTS: dict[tuple[SparkSession, str], tuple[FileVersions, DataFrame]] = {}
+_CONTROL_SNAPSHOTS_CAP = 16
+# queries run foreachBatch on threads of their own
+_CONTROL_SNAPSHOTS_LOCK = threading.Lock()
 
 
 def read_control_dir(spark: SparkSession, path: str) -> DataFrame:
@@ -170,9 +190,33 @@ def read_control_dir(spark: SparkSession, path: str) -> DataFrame:
     offset) changelog records compacts to latest-per-key with tombstone
     handling — identical semantics, different transport — so the
     GlobalKTable refresh path is exercisable end-to-end without Kafka.
+
+    The snapshot is a driver-local (Arrow-backed ``LocalRelation``)
+    table, memoized per session and re-read when the control dir's
+    version changes: its data files' ``(name, size, mtime_ns)``
+    listing. On a hit nothing is read: collecting the word list starts
+    no Spark job, and broadcasting the blocked pairs collects the
+    driver's own rows (no scan, no shuffle). The token is taken before
+    the read, so a file landing mid-read costs one extra re-read, never
+    a stale snapshot.
     """
-    kv = spark.read.schema("key string, value string, offset long").parquet(path)
-    return serde.compact_changelog(kv).select("key", "value")
+    token = dir_version(path)
+    key = (spark, os.path.abspath(path))
+    hit = _CONTROL_SNAPSHOTS.get(key)
+    if token is not None and hit is not None and hit[0] == token:
+        return hit[1]
+    # a control table is small: compact it in one partition (no
+    # shuffle) and bring it to the driver
+    kv = spark.read.schema("key string, value string, offset long").parquet(path).coalesce(1)
+    compacted = serde.compact_changelog(kv).select("key", "value")
+    snapshot = spark.createDataFrame(compacted.toArrow(), compacted.schema)
+    if token is not None:
+        with _CONTROL_SNAPSHOTS_LOCK:
+            _CONTROL_SNAPSHOTS.pop(key, None)
+            if len(_CONTROL_SNAPSHOTS) >= _CONTROL_SNAPSHOTS_CAP:
+                del _CONTROL_SNAPSHOTS[next(iter(_CONTROL_SNAPSHOTS))]
+            _CONTROL_SNAPSHOTS[key] = (token, snapshot)
+    return snapshot
 
 
 def run_file_topology_with_refresh(

@@ -127,9 +127,10 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
     labels: dict[int, dict] = {}
 
     def sink(df, bid):
-        labels.setdefault(bid, {}).update(
-            {r.doc_id: r for r in df.collect()}
-        )
+        # collect before publishing the batch: the main thread stops the
+        # query as soon as a second batch id appears in ``labels``
+        rows = {r.doc_id: r for r in df.collect()}
+        labels.setdefault(bid, {}).update(rows)
 
     with open(src / "b1.json", "w") as f:
         for i, t in enumerate(
@@ -154,12 +155,16 @@ def test_streaming_incremental_dedup_foreachbatch(spark, tmp_path):
         deadline = time.time() + 150
         while not labels and time.time() < deadline:
             time.sleep(0.5)
-        # drop batch 2 in AFTER batch 1 processed
-        with open(src / "b2.json", "w") as f:
+        # drop batch 2 in AFTER batch 1 processed; written beside the
+        # watched dir and renamed in, so the source never lists it half-written
+        staging = tmp_path / "staging"
+        staging.mkdir()
+        with open(staging / "b2.json", "w") as f:
             f.write(json.dumps({"doc_id": 10,
                 "text": "first streaming document with enough words to signature"}) + "\n")
             f.write(json.dumps({"doc_id": 11,
                 "text": "a wholly new third document streaming in fresh today"}) + "\n")
+        os.replace(staging / "b2.json", src / "b2.json")
         deadline = time.time() + 210
         while len(labels) < 2 and time.time() < deadline:
             time.sleep(0.5)

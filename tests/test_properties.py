@@ -1894,6 +1894,34 @@ def test_gorilla_rejects_bad_input():
         decode_gorilla(b"nope")
 
 
+def test_gorilla_truncated_block_raises_defined_error():
+    """A block cut off at any byte past its 8-byte header raises the
+    defined ``truncated Gorilla block`` error, not a shift error from
+    inside the decoder; the whole block still round-trips bit-exactly.
+    The series walks every timestamp bucket and both value windows."""
+    import numpy as np
+    import pytest
+
+    from hw_kafka_streams_spark.operators.gorillacodec import (
+        decode_gorilla,
+        encode_gorilla,
+    )
+
+    rng = np.random.RandomState(7)
+    steps = [60, 60, 60, 61, 100, 300, 2000, 10**9, 60, 0, 60] * 4
+    ts = np.cumsum([1_700_000_000] + steps).astype(np.int64)
+    vs = np.round(rng.randn(len(ts)) * 3 + 100, 2)
+    vs[5:9] = vs[4]  # zero XORs
+    vs[20:24] = rng.randint(0, 2**63, 4, dtype=np.int64).view(np.float64)
+    enc = encode_gorilla(ts, vs)
+    dts, dvs = decode_gorilla(enc)
+    assert np.array_equal(dts, ts)
+    assert np.array_equal(dvs.view(np.uint64), vs.view(np.uint64))
+    for cut in range(8, len(enc)):
+        with pytest.raises(ValueError, match="^truncated Gorilla block$"):
+            decode_gorilla(enc[:cut])
+
+
 def test_tiff_jpeg_in_tiff_roundtrip_within_tolerance():
     """Compression 7 (new-style JPEG-in-TIFF): each strip is a full
     JPEG interchange stream decoded through the in-house T.81 codec;

@@ -120,6 +120,30 @@ def test_spread_small_noop_on_non_file_source(spark):
     assert spread_small(df, key="doc_id") is df
 
 
+def test_scan_width_reprobed_after_in_place_rewrite(spark, tmp_path, monkeypatch):
+    """The width memo is keyed on each file's (path, size, mtime_ns): a
+    file rewritten in place with a different row-group count, under the
+    same name, is probed again. The memo stays bounded."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hw_kafka_streams_spark.operators import skew
+
+    monkeypatch.setattr(skew, "_WIDTH_MEMO", {})
+    monkeypatch.setattr(skew, "_WIDTH_MEMO_CAP", 2)
+    path = str(tmp_path / "t.parquet")
+    table = pa.table({"k": list(range(30))})
+    pq.write_table(table, path, row_group_size=30)
+    assert skew._probed_scan_width(spark.read.parquet(path)) == 1
+    pq.write_table(table, path, row_group_size=10)
+    assert skew._probed_scan_width(spark.read.parquet(path)) == 3
+    for i in range(3):
+        other = str(tmp_path / f"o{i}.parquet")
+        pq.write_table(table, other, row_group_size=15)
+        assert skew._probed_scan_width(spark.read.parquet(other)) == 2
+        assert len(skew._WIDTH_MEMO) <= 2
+
+
 def test_mlm_mask_plan_hashes_actions_once(spark, sf_dir):
     """The round-11 rewrite binds the masked-position and action-hash
     arrays as lambda variables: within each output column's expression

@@ -306,6 +306,189 @@ def test_dim_refresh_between_batches(spark, tmpdir):
     assert out == [("login4", "Java"), ("login5", "**** rocks")]
 
 
+def _spark_jobs(spark, action) -> list[int]:
+    """Ids of the Spark jobs that ``action`` starts, through the public
+    job-group API. A fence job in a group of its own follows; the
+    listener bus delivers events in order, so once the fence is visible
+    every job ``action`` started is too."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"probe-{uuid.uuid4().hex}"
+    for g, run in ((group, action), (f"{group}-fence", lambda: sc.parallelize([0], 1).count())):
+        sc.setJobGroup(g, g)
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(f"{group}-fence") and time.time() < deadline:
+        time.sleep(0.05)
+    return list(tracker.getJobIdsForGroup(group))
+
+
+def _write_control(path: str, rows: list[tuple], first_offset: int = 0) -> None:
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table(
+            {
+                "key": [k for k, _ in rows],
+                "value": [v for _, v in rows],
+                "offset": list(range(first_offset, first_offset + len(rows))),
+            },
+            schema=pa.schema([("key", pa.string()), ("value", pa.string()), ("offset", pa.int64())]),
+        ),
+        path,
+    )
+
+
+def _words_dir(tmpdir: str, rows: list[tuple]) -> str:
+    import os
+
+    d = f"{tmpdir}/words"
+    os.makedirs(d, exist_ok=True)
+    _write_control(f"{d}/p0.parquet", rows)
+    return d
+
+
+def test_control_dir_snapshot_unchanged_dir_starts_no_job(spark, tmpdir):
+    """An unchanged control dir is served from the memo: the word-list
+    collect over it runs on the driver, with no Spark job."""
+    from hw_kafka_streams_spark.operators.censor import banned_words
+    from hw_kafka_streams_spark.streaming.pipeline import read_control_dir
+
+    d = _words_dir(tmpdir, [("Java", "ban"), ("Kotlin", "ok")])
+    words: list = []
+    # the first read compacts the dir: that one runs Spark jobs
+    assert _spark_jobs(spark, lambda: words.append(banned_words(read_control_dir(spark, d))))
+    snap = read_control_dir(spark, d)
+    assert _spark_jobs(spark, lambda: words.append(banned_words(read_control_dir(spark, d)))) == []
+    assert read_control_dir(spark, d) is snap
+    assert words == [["Java"], ["Java"]]
+
+
+def test_control_dir_snapshot_sees_appended_file(spark, tmpdir):
+    from hw_kafka_streams_spark.operators.censor import banned_words
+    from hw_kafka_streams_spark.streaming.pipeline import read_control_dir
+
+    d = _words_dir(tmpdir, [("Java", "ban")])
+    assert banned_words(read_control_dir(spark, d)) == ["Java"]
+    _write_control(f"{d}/p1.parquet", [("Kotlin", "ban"), ("Java", "ok")], first_offset=1)
+    assert banned_words(read_control_dir(spark, d)) == ["Kotlin"]
+
+
+def test_control_dir_snapshot_rereads_same_name_rewrite(spark, tmpdir):
+    """A file rewritten in place under its old name is re-read when its
+    size changes, and when only its mtime does."""
+    import os
+
+    from hw_kafka_streams_spark.operators.censor import banned_words
+    from hw_kafka_streams_spark.streaming.pipeline import read_control_dir
+
+    d = _words_dir(tmpdir, [("Java", "ban")])
+    f = f"{d}/p0.parquet"
+    assert banned_words(read_control_dir(spark, d)) == ["Java"]
+    size = os.path.getsize(f)
+    _write_control(f, [("Java", "ban"), ("Scala", "ban")])
+    assert os.path.getsize(f) != size
+    assert sorted(banned_words(read_control_dir(spark, d))) == ["Java", "Scala"]
+    # same size, new mtime
+    st = os.stat(f)
+    _write_control(f, [("Jawa", "ban"), ("Scala", "ban")])
+    assert os.path.getsize(f) == st.st_size
+    os.utime(f, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
+    assert sorted(banned_words(read_control_dir(spark, d))) == ["Jawa", "Scala"]
+
+
+def test_control_dir_snapshot_all_tombstoned_is_empty(spark, tmpdir):
+    from hw_kafka_streams_spark.streaming.pipeline import read_control_dir
+
+    d = _words_dir(tmpdir, [("Java", "ban"), ("Kotlin", "ban"), ("Java", None), ("Kotlin", None)])
+    snap = read_control_dir(spark, d)
+    assert snap.schema.simpleString() == "struct<key:string,value:string>"
+    assert snap.collect() == []
+
+
+def test_control_dir_snapshot_not_served_to_new_session(tmpdir):
+    """The benchmark's warm set-up stops the session and starts a new
+    one in the same JVM: the new session re-reads, and its snapshot
+    works after the old session is gone. Runs in a process of its own,
+    since stopping the shared test session would end every later test."""
+    import os
+    import subprocess
+    import sys
+
+    d = _words_dir(tmpdir, [("login1:login2", "blocked")])
+    script = f"""
+from hw_kafka_streams_spark.session import get_spark
+from hw_kafka_streams_spark.operators.censor import block_messages
+from hw_kafka_streams_spark.streaming.pipeline import read_control_dir
+
+old = get_spark("memo-old")
+first = read_control_dir(old, {d!r})
+first.collect()
+old.stop()
+new = get_spark("memo-new")
+snap = read_control_dir(new, {d!r})
+assert snap is not first and snap.sparkSession is new
+msgs = new.createDataFrame(
+    [("login2", "hi", "login1"), ("login3", "yo", "login1")],
+    "sender string, text string, receiver string",
+)
+assert [r.sender for r in block_messages(msgs, snap).collect()] == ["login3"]
+new.stop()
+print("OK")
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=root + os.pathsep + os.environ.get("PYTHONPATH", ""))
+    res = subprocess.run([sys.executable, "-c", script], env=env, cwd=root,
+                         capture_output=True, text=True, timeout=300)
+    assert res.returncode == 0 and res.stdout.strip().endswith("OK"), res.stderr[-3000:]
+
+
+def test_control_dir_snapshot_memo_is_bounded(spark, tmpdir, monkeypatch):
+    import os
+
+    from hw_kafka_streams_spark.streaming import pipeline
+
+    monkeypatch.setattr(pipeline, "_CONTROL_SNAPSHOTS", {})
+    monkeypatch.setattr(pipeline, "_CONTROL_SNAPSHOTS_CAP", 3)
+    dirs = []
+    for i in range(5):
+        d = f"{tmpdir}/ctl{i}"
+        os.makedirs(d)
+        _write_control(f"{d}/p0.parquet", [(f"w{i}", "ban")])
+        dirs.append(d)
+        pipeline.read_control_dir(spark, d)
+        assert len(pipeline._CONTROL_SNAPSHOTS) <= 3
+    # a changed dir replaces its own entry instead of adding one
+    _write_control(f"{dirs[-1]}/p1.parquet", [("x", "ban")], first_offset=1)
+    pipeline.read_control_dir(spark, dirs[-1])
+    assert len(pipeline._CONTROL_SNAPSHOTS) == 3
+    # the newest dirs are still served
+    assert _spark_jobs(spark, lambda: [pipeline.read_control_dir(spark, d).collect()
+                                       for d in dirs[-3:]]) == []
+
+
+def test_many_input_paths_start_no_listing_job(spark, tmpdir):
+    """``get_spark`` lists input paths on the driver: reading more than
+    32 parquet paths (a file-stream micro-batch's shape) starts no
+    distributed listing job."""
+    paths = []
+    for i in range(40):
+        paths.append(f"{tmpdir}/f{i}.parquet")
+        _write_control(paths[-1], [(f"k{i}", "v")])
+    df_box: list = []
+    assert _spark_jobs(
+        spark, lambda: df_box.append(spark.read.schema("key string").parquet(*paths))
+    ) == []
+    assert df_box[0].count() == 40
+
+
 @pytest.mark.slowgate
 def test_dim_refresh_midstream_live_query(spark, tmpdir):
     """GlobalKTable freshness through a RUNNING StreamingQuery
